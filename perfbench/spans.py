@@ -31,10 +31,10 @@ class Tracer:
         self._cached: list = []
 
     @contextlib.contextmanager
-    def span(self, name: str, **attrs):
+    def span(self, name: str):
         sp = {"id": len(self.spans), "name": name,
               "parent": self._stack[-1] if self._stack else None,
-              "start": time.perf_counter(), "end": None, **attrs}
+              "start": time.perf_counter(), "end": None}
         self.spans.append(sp)
         self._stack.append(sp["id"])
         try:
