@@ -135,7 +135,6 @@ class CorpusRefine:
         self.n = self.sizes[scale]["n_docs"]
         self.h = harness
         self.dir = os.path.join(WORK, self.name, scale)
-        self.chains = 0
 
     def build(self) -> None:
         """The documents table and the WARC archive built from it."""
@@ -170,11 +169,10 @@ class CorpusRefine:
         from ccspark.extract import extract_links
         from ccspark.htmlspans import warc_to_documents
         from ccspark.registry import ALL
-        self.chains += 1
         out = fresh_dir(os.path.join(self.dir, "out"))
         docs_path = os.path.join(out, "documents")
         results = {}
-        with self.h.unit("refine.chain", f"c{self.chains}") as rec:
+        with self.h.unit("refine.chain", "chain") as rec:
             with self.h.span("htmlspans.warc_to_documents"):
                 (warc_to_documents(self.spark, self.archive)
                  .write.mode("overwrite").parquet(docs_path))
