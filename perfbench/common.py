@@ -119,8 +119,11 @@ def median(xs) -> float:
     return float(statistics.median(xs))
 
 
-def median_wall(fn, reps: int) -> float:
-    """Median wall seconds of `reps` calls of `fn`."""
+def median_wall(fn, reps: int, warmup: int = 0) -> float:
+    """Median wall seconds of `reps` calls of `fn`, after `warmup` untimed
+    calls (the first calls of a query compile its code and run slower)."""
+    for _ in range(warmup):
+        fn()
     walls = []
     for _ in range(reps):
         t0 = time.perf_counter()

@@ -36,7 +36,8 @@ import pyarrow.parquet as pq
 from common import (WORK, GateError, dir_bytes, fresh_dir, median,
                     median_wall, table_bytes)
 
-RESUME_REPS = 5
+# resume probes: untimed warm-up calls, then the timed ones
+RESUME_WARMUP, RESUME_REPS = 3, 15
 # per-round counts that must repeat exactly for one seed
 ROUND_KEYS = ("candidates_in", "new_seen", "dup_dropped", "scheduled",
               "frontier_depth")
@@ -105,14 +106,15 @@ class CrawlWorkload:
         return res
 
     def _resume_probe(self, next_round: int) -> float:
-        """Median of RESUME_REPS timings of: open a new engine over the
-        state, resume, and materialize the resumed candidates."""
+        """Median of RESUME_REPS timings, after RESUME_WARMUP untimed
+        calls, of: open a new engine over the state, resume, and
+        materialize the resumed candidates."""
         def resume():
             nxt, cand = self._engine().resume_round()
             if nxt != next_round or cand is None:
                 raise GateError(f"resume_round returned round {nxt}")
             cand.count()
-        return median_wall(resume, RESUME_REPS)
+        return median_wall(resume, RESUME_REPS, RESUME_WARMUP)
 
     def layer_counts(self, ops: list[dict], spans: list[dict]) -> dict:
         """Per-layer counts and ratios of traced rounds, from the round log,
